@@ -1333,9 +1333,9 @@ def _bpe_train_oracle(num_merges: int = 20, min_pair_count: int = 2) -> str:
     x = r, append ``r`` WITHOUT a separator (fusing l+r), else append
     with one.  A just-fused symbol is l||r ≠ l (r nonempty), so the fold
     can never re-fuse through it — exactly the scan-and-skip semantics
-    of the Spark ``_merge_udf``.  Early stop: an empty argmax empties
-    the cross join, so later rounds yield no merges, matching the
-    driver-side ``break``.
+    of ``bpe._fuse``, which the Spark rewrite applies.  Early stop: an
+    empty argmax empties the cross join, so later rounds yield no
+    merges, matching the driver-side ``break``.
 
     Every chained CTE is MATERIALIZED: without it DuckDB inlines, and
     since round i+1 references s_i twice (directly and via m_i) the

@@ -7,12 +7,21 @@ with a checkpointed Structured Streaming query:
 - ``withWatermark`` + ``dropDuplicatesWithinWatermark`` replaces the
   in-memory per-key staleness filter (app.rb:145-167) — relaxed
   semantics; the bit-faithful variant is streaming.dedup_state;
-- ``foreachBatch`` fans out to the webhook sinks (app.rb:211-267),
-  upgrading at-most-once to at-least-once with idempotent keys.
+- ``foreachBatch`` fans out to the webhook sinks (app.rb:211-267).
+
+Delivery contract, one path: ``start_webhook_query`` delivers
+effectively-once per micro-batch.  Its body runs under
+``effectively_once`` with the ledger at ``<checkpoint_dir>/ledger``, so
+a batch replayed from the checkpoint is skipped once delivered, and
+resetting the checkpoint resets the ledger with it.  A batch that
+failed before its ledger marker is redelivered whole: parquet output
+overwrites that batch's partition; HTTP rows are at-least-once within
+that batch only.  (The reference is at-most-once, app.rb:229-234.)
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,7 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..session import ensure_runtime_confs
 from .pipeline import task_event_pipeline
-from .sinks import parquet_transport, webhook_foreach_batch
+from .sinks import effectively_once, parquet_transport, webhook_foreach_batch
 
 
 ROCKSDB_PROVIDER = (
@@ -67,40 +76,12 @@ def start_webhook_query(
     transport: Callable[[DataFrame, str], None] | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
-    transport = transport or parquet_transport(output_dir)
-    writer = (
-        deduped.writeStream.foreachBatch(webhook_foreach_batch(transport))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
-
-
-def start_webhook_query_v2(
-    deduped: DataFrame,
-    checkpoint_dir: str,
-    output_dir: str,
-    ledger_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Effectively-once variant: per-batch overwrite transport + a
-    delivery ledger keyed on batch id, so checkpoint-recovery replays
-    neither duplicate files nor re-POST delivered batches.  (The
-    reference is at-most-once — app.rb:229-234 — this strictly
-    strengthens it.)"""
-    from .sinks import (
-        batch_overwrite_transport,
-        effectively_once,
-        webhook_foreach_batch_v2,
-    )
-
+    """Start the webhook delivery query (effectively-once per micro-batch,
+    see the module docstring); ``transport`` defaults to
+    ``parquet_transport(output_dir)``."""
     body = effectively_once(
-        webhook_foreach_batch_v2(batch_overwrite_transport(output_dir)),
-        ledger_dir,
+        webhook_foreach_batch(transport or parquet_transport(output_dir)),
+        os.path.join(checkpoint_dir, "ledger"),
     )
     writer = (
         deduped.writeStream.foreachBatch(body)

@@ -2,14 +2,21 @@
 
 The reference POSTs one webhook per event, sequentially, no retry
 (at-most-once; app.rb:229-234,258-262).  Here payload shaping is a pure
-projection (so it runs distributed) and delivery is a ``foreachBatch``
-that fans out each micro-batch to every destination — checkpointed, so
-the pipeline upgrades to at-least-once with idempotent keys
-(raft_index, task_identifier, event_type, event_time_ns).
+projection (so it runs distributed) and delivery is ONE ``foreachBatch``
+body that fans out each micro-batch to every destination.
 
-Actual HTTP POSTing is injectable: the default "transport" appends to a
-parquet directory (the test/dev stand-in); a real deployment passes a
-requests-based sender into ``webhook_foreach_batch``.
+Delivery contract: effectively-once per micro-batch.  The runner wraps
+``webhook_foreach_batch`` in ``effectively_once``, whose ledger lives
+inside the query's checkpoint, so a batch id replayed from the
+checkpoint is skipped once its ledger marker exists.  A batch that
+failed before its marker is redelivered whole: ``parquet_transport``
+overwrites that batch's own ``batch_id=<n>`` partition, and
+``http_transport`` rows are at-least-once within that batch only.
+
+Transports are injectable ``(payloads, destination)`` callables; every
+payload row carries ``batch_id`` so a transport can key on it.  The
+default writes parquet (the test/dev stand-in); ``http_transport``
+POSTs for real.
 """
 
 from __future__ import annotations
@@ -101,14 +108,20 @@ def slack_payload(classified: DataFrame) -> DataFrame:
 
 
 def parquet_transport(dest_dir: str) -> Callable[[DataFrame, str], None]:
-    """Default delivery: append payloads to a parquet dir per destination
-    (stand-in for the HTTP POST; swap for a requests-based sender in
-    production)."""
+    """Default delivery: each micro-batch lands in its own
+    ``<dest_dir>/<destination>/batch_id=<n>/`` partition, written with
+    dynamic partition overwrite, so a replayed batch rewrites its own
+    files instead of appending duplicates (idempotent per destination
+    and batch id)."""
 
     def send(payloads: DataFrame, destination: str) -> None:
-        payloads.withColumn("destination", F.lit(destination)).write.mode(
-            "append"
-        ).parquet(f"{dest_dir}/{destination}")
+        (
+            payloads.withColumn("destination", F.lit(destination))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(f"{dest_dir}/{destination}")
+        )
 
     return send
 
@@ -119,17 +132,20 @@ def http_transport(
     """Real HTTP delivery matching the reference's webhook semantics
     (app.rb:229-234,258-262): one POST per event, JSON body, no
     application-level retry — a failed POST raises and fails the batch.
+    Only ``row["payload"]`` is sent; other columns (``batch_id``, the
+    event key) ride along unused.
 
-    Delivery guarantee, stated precisely: at-MOST-once only while a Spark
-    task runs exactly once.  A mid-partition failure followed by a Spark
-    TASK RETRY re-POSTs every row of that partition that was already
-    delivered before the failure, and a stale keep-alive reconnect can
-    resend one in-flight request — so under retries delivery is
-    at-LEAST-once per row, and per-partition ordering restarts from the
-    first row on each attempt.  Receivers must be idempotent, or compose
-    with ``effectively_once`` (ledger skips redelivered batches) and/or
-    run the sink stage with ``spark.task.maxFailures=1`` to forbid task
-    retries outright.  (The reference itself is fire-and-forget.)
+    Delivery guarantee under the runner's one path: effectively-once per
+    micro-batch — a batch whose ledger marker exists is never POSTed
+    again.  Within a batch that failed before its marker, rows are
+    at-least-once: the replay re-POSTs every row of the batch, a Spark
+    TASK RETRY re-POSTs the rows of a partition already delivered
+    before the failure (per-partition order restarts from its first
+    row), and a stale keep-alive reconnect can resend one in-flight
+    request.  Receivers that must see each event once dedupe on
+    (raft_index, task_identifier, event_type, event_time_ns), or run the
+    sink stage with ``spark.task.maxFailures=1``.  (The reference itself
+    is fire-and-forget.)
 
     Scale shape: POSTs run on the EXECUTORS via ``foreachPartition`` —
     parallel across partitions, strictly sequential within one — and the
@@ -231,31 +247,21 @@ def webhook_foreach_batch(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body: shape + deliver each micro-batch to every
     destination (app.rb:211,236,264 fan-out), preserving per-key order
-    within a batch via sortWithinPartitions on the delivery key."""
+    within a batch via sortWithinPartitions on the delivery key.  Each
+    payload row carries the micro-batch's ``batch_id``."""
     shapers = {"discord": discord_payload, "slack": slack_payload}
 
     def process(batch: DataFrame, batch_id: int) -> None:
         for dest in destinations:
-            payloads = shapers[dest](batch).repartition(
-                F.col("task_identifier")
-            ).sortWithinPartitions("raft_index", "event_time_ns")
+            payloads = (
+                shapers[dest](batch)
+                .withColumn("batch_id", F.lit(batch_id))
+                .repartition(F.col("task_identifier"))
+                .sortWithinPartitions("raft_index", "event_time_ns")
+            )
             transport(payloads, dest)
 
     return process
-
-
-def batch_overwrite_transport(dest_dir: str) -> Callable[[DataFrame, str, int], None]:
-    """Replay-safe delivery: each micro-batch lands in its own
-    ``batch_id=<n>`` directory with overwrite semantics, so redelivering
-    a batch (recovery replay) rewrites the same files instead of
-    appending duplicates — idempotent per (destination, batch_id)."""
-
-    def send(payloads: DataFrame, destination: str, batch_id: int) -> None:
-        payloads.withColumn("destination", F.lit(destination)).write.mode(
-            "overwrite"
-        ).parquet(f"{dest_dir}/{destination}/batch_id={batch_id}")
-
-    return send
 
 
 def effectively_once(
@@ -267,12 +273,12 @@ def effectively_once(
 
     The marker write is not atomic with delivery, so the body must be
     idempotent per batch id for the composition to be exactly-once —
-    pair with ``batch_overwrite_transport`` (same-path overwrite) or an
-    HTTP receiver that dedupes on (batch_id, event key).  This exceeds
-    the reference's delivery contract (at-most-once, fire-and-forget
-    POST, app.rb:229-234,258-262).  ``foreachBatch`` runs on the driver;
-    in a cluster deployment the ledger dir lives on shared storage
-    (object store / DBFS), exactly like the checkpoint dir."""
+    ``parquet_transport`` overwrites the batch's own partition; an HTTP
+    receiver dedupes on the event key.  Batch ids are only meaningful
+    per checkpoint, so the ledger must share the checkpoint's lifetime
+    (the runner puts it inside the checkpoint directory).
+    ``foreachBatch`` runs on the driver; in a cluster deployment the
+    ledger lives on shared storage, exactly like the checkpoint."""
     import os
 
     os.makedirs(ledger_dir, exist_ok=True)
@@ -280,29 +286,13 @@ def effectively_once(
     def wrapped(batch: DataFrame, batch_id: int) -> None:
         marker = os.path.join(ledger_dir, f"batch-{batch_id}.done")
         if os.path.exists(marker):
+            # Delivered already; still run the batch through the no-op
+            # sink, since Spark fails a stateful batch whose
+            # foreachBatch left partitions unprocessed.
+            batch.write.format("noop").mode("overwrite").save()
             return
         process(batch, batch_id)
         with open(marker, "w", encoding="utf-8") as fh:
             fh.write("ok")
 
     return wrapped
-
-
-def webhook_foreach_batch_v2(
-    transport: Callable[[DataFrame, str, int], None],
-    destinations: tuple[str, ...] = ("discord", "slack"),
-) -> Callable[[DataFrame, int], None]:
-    """Like ``webhook_foreach_batch`` but the transport also receives the
-    batch id, enabling per-batch idempotent delivery paths."""
-    shapers = {"discord": discord_payload, "slack": slack_payload}
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        for dest in destinations:
-            payloads = (
-                shapers[dest](batch)
-                .repartition(F.col("task_identifier"))
-                .sortWithinPartitions("raft_index", "event_time_ns")
-            )
-            transport(payloads, dest, batch_id)
-
-    return process

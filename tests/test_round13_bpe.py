@@ -4,8 +4,14 @@
 top-K pair list in one Arrow pass (``_safe_prefix``) instead of one
 merge per round.  The merge list must be BYTE-IDENTICAL to the
 sequential algorithm's — these tests pin that against a pure-python
-one-merge-per-round referee on tie- and collision-heavy corpora, plus
-unit-pin the guard rules themselves (no Spark needed for those).
+one-merge-per-round referee on tie-, collision- and run-heavy corpora,
+plus unit-pin the guard rules themselves (no Spark needed for those).
+
+Random corpora over small alphabets almost never reach the self-merge
+case (0 of 2,000 diverged before it was guarded), so the run-heavy
+corpora are built for it: runs of 3+ of one symbol, whose self-merge
+(a, a) creates (aa, a) / (aa, aa), next to an unrelated word pool that
+offers a symbol-disjoint second candidate.
 """
 
 import random
@@ -15,6 +21,20 @@ import pytest
 from nomad_event_streamer_spark.operators import bpe
 
 
+def _pair_counts(words):
+    counts = {}
+    for syms, c in words:
+        for i in range(len(syms) - 1):
+            p = (syms[i], syms[i + 1])
+            counts[p] = counts.get(p, 0) + c
+    return counts
+
+
+def _argmax_order(counts):
+    """Pair counts in the argmax order: count desc, then l, r asc."""
+    return sorted(counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
+
+
 def _ref_train(word_counts, num_merges, min_pair_count=2):
     """Pure-python ONE-merge-per-round BPE — the sequential semantics
     the batched trainer must reproduce exactly (count desc, l, r asc
@@ -22,20 +42,37 @@ def _ref_train(word_counts, num_merges, min_pair_count=2):
     words = [(list(w) + [bpe.END], c) for w, c in word_counts]
     merges = []
     for _ in range(num_merges):
-        counts = {}
-        for syms, c in words:
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + c
+        counts = _pair_counts(words)
         if not counts:
             break
-        (l, r), c = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
+        (l, r), c = _argmax_order(counts)[0]
         if c < min_pair_count:
             break
         merges.append((l, r))
         words = [(bpe._fuse(syms, l, r), cnt) for syms, cnt in words]
+    return merges
+
+
+def _batched_train(word_counts, num_merges, min_pair_count=2, k=12):
+    """Pure-python mirror of ``bpe_train``'s batched loop: exact top-k
+    pair list per round, ``_safe_prefix``, then the accepted fuses."""
+    words = [(list(w) + [bpe.END], c) for w, c in word_counts]
+    merges, known = [], {bpe.END}
+    while len(merges) < num_merges:
+        top = [
+            {"l": l, "r": r, "c": c}
+            for (l, r), c in _argmax_order(_pair_counts(words))[:k]
+        ]
+        if not top or top[0]["c"] < min_pair_count:
+            break
+        accepted, done = bpe._safe_prefix(
+            top, k, min_pair_count, num_merges - len(merges), known
+        )
+        merges.extend(accepted)
+        if done:
+            break
+        for l, r in accepted:
+            words = [(bpe._fuse(syms, l, r), cnt) for syms, cnt in words]
     return merges
 
 
@@ -54,6 +91,25 @@ def _rand_word_counts(seed):
     return sorted(words.items())
 
 
+def _run_heavy_word_counts(seed):
+    rng = random.Random(seed)
+    words = {}
+    for _ in range(rng.randint(4, 10)):
+        w = rng.choice("ab") * rng.randint(3, 6) + "".join(
+            rng.choice("abc") for _ in range(rng.randint(0, 2))
+        )
+        words[w] = words.get(w, 0) + rng.randint(1, 6)
+    for _ in range(rng.randint(2, 6)):
+        w = "".join(rng.choice("xyz") for _ in range(rng.randint(1, 4)))
+        words[w] = words.get(w, 0) + rng.randint(1, 9)
+    return sorted(words.items())
+
+
+# After (l,l) the sequential argmax is (ll,l) at 8; a batch that kept
+# going past the self-merge took the disjoint (e,f) at 7 first.
+SELF_MERGE_CORPUS = [("llla", 4), ("lllb", 4), ("ef", 7)]
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3, 7])
 def test_batched_equals_sequential_random(spark, seed):
     wc = _rand_word_counts(seed)
@@ -66,6 +122,31 @@ def test_batched_equals_sequential_tie_heavy(spark):
     wc = [("abab", 3), ("baba", 3), ("aabb", 3), ("bbaa", 3), ("ab", 3)]
     got = bpe.bpe_train(_corpus_df(spark, wc), num_merges=10)
     assert got == _ref_train(wc, 10)
+
+
+def test_batched_equals_sequential_self_merge(spark):
+    got = bpe.bpe_train(_corpus_df(spark, SELF_MERGE_CORPUS), num_merges=3)
+    assert got == _ref_train(SELF_MERGE_CORPUS, 3)
+    assert got == [("l", "l"), ("ll", "l"), ("e", "f")]
+
+
+@pytest.mark.parametrize("seed", [2, 5])
+def test_batched_equals_sequential_run_heavy(spark, seed):
+    wc = _run_heavy_word_counts(seed)
+    got = bpe.bpe_train(_corpus_df(spark, wc), num_merges=12)
+    assert got == _ref_train(wc, 12)
+
+
+def test_batched_loop_equals_sequential_run_heavy_sweep():
+    """300 run-heavy corpora through the pure-python batched loop (no
+    Spark): before the self-merge guard about a third diverged."""
+    diverged = [
+        seed
+        for seed in range(300)
+        if _batched_train(_run_heavy_word_counts(seed), 12)
+        != _ref_train(_run_heavy_word_counts(seed), 12)
+    ]
+    assert diverged == []
 
 
 def test_batched_respects_min_pair_count(spark):
@@ -115,6 +196,14 @@ def test_safe_prefix_stops_after_collision():
     top = _rows(("a", "b", 10), ("c", "d", 8))
     acc, _ = bpe._safe_prefix(top, 12, 2, 99, {bpe.END, "ab"})
     assert acc == [("a", "b")]
+
+
+def test_safe_prefix_stops_after_self_merge():
+    # (l,l) creates (ll,l) bounded only by count(l,l) itself, which the
+    # shadow scan skips as accepted: (e,f) is not provably next
+    top = _rows(("l", "l", 16), ("e", "f", 7), ("f", bpe.END, 7))
+    acc, _ = bpe._safe_prefix(top, 12, 2, 99, {bpe.END})
+    assert acc == [("l", "l")]
 
 
 def test_safe_prefix_done_below_min_count():
